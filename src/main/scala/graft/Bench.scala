@@ -159,6 +159,8 @@ object Bench {
     * combined capture (sbt re-tags stderr as `[error]` stdout lines).
     * Everything that can still write a line — the artifact note AND
     * spark.stop()'s shutdown logging — now runs BEFORE the JSON print.
+    * A failing stop() is reported on stderr and never suppresses the
+    * JSON: the measurements are complete before shutdown starts.
     * BenchEmitSpec pins the ordering.
     */
   private[graft] def emitResult(line: String, out: java.nio.file.Path,
@@ -167,7 +169,8 @@ object Bench {
                                 stderr: String => Unit): Unit = {
     java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
     stderr(s"[bench] wrote $out")
-    stop()
+    try stop()
+    catch { case e: Exception => stderr(s"[bench] stop failed: $e") }
     stdout(line)
   }
 }

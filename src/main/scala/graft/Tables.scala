@@ -10,8 +10,8 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 object Tables {
 
-  /** Parquet SCHEMA memo per (JVM, path). Every `spark.read.parquet(path)`
-    * without an explicit schema re-runs footer-based schema inference —
+  /** Parquet SCHEMA memo per (JVM, nanosAsLong setting, path). Every
+    * `spark.read.parquet(path)` without an explicit schema re-runs footer-based schema inference —
     * pure driver-side metadata work repeated on every DataFrame
     * CONSTRUCTION of every query (ProfileFloor r16 measured it as a
     * visible slice of the ~0.1-0.2 s per-query floor across 271 bench
@@ -22,16 +22,24 @@ object Tables {
     * run still scans the parquet data in full. A production deployment
     * gets the same effect from a catalog (table schemas are declared, not
     * re-inferred per query).
+    *
+    * The key carries the one session setting that changes what inference
+    * returns for the testdata: `spark.sql.legacy.parquet.nanosAsLong`
+    * (TIMESTAMP(NANOS) reads as LONG under it and is rejected without
+    * it). Keyed by path alone, a read after the setting changed would
+    * silently reuse the first reader's schema.
     */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), org.apache.spark.sql.types.StructType]()
 
-  private def pq(s: SparkSession, path: String): DataFrame = {
-    val sch = schemaMemo.get(path)
+  private[graft] def pq(s: SparkSession, path: String): DataFrame = {
+    val key = (s.conf.get(NanosAsLong, "false"), path)
+    val sch = schemaMemo.get(key)
     if (sch != null) s.read.schema(sch).parquet(path)
     else {
       val df = s.read.parquet(path)
-      schemaMemo.put(path, df.schema)
+      schemaMemo.put(key, df.schema)
       df
     }
   }

@@ -61,7 +61,16 @@ object Search {
     */
   private def componentsOver(terms: DataFrame,
                              postings: DataFrame, termDf: DataFrame,
-                             docInfo: DataFrame): DataFrame = {
+                             docInfo: DataFrame): DataFrame =
+    // J1 + P6: inner join drops df==0 terms (terms absent from the index
+    // simply have no match). Broadcast the tiny terms relation.
+    scoreTerms(broadcast(terms).join(termDf, "term"), postings, docInfo)
+
+  /** BM25 components for the (term, df) rows of the query's terms: J2
+    * postings fetch, J3 doc length attach, J4 stats broadcast.
+    */
+  private def scoreTerms(queryTermDf: DataFrame, postings: DataFrame,
+                         docInfo: DataFrame): DataFrame = {
     // Collection stats (A4/A5) join in as a broadcast singleton — no driver
     // action during plan construction, so the whole search stays ONE lazy
     // DAG (the reference caches stats per session, app/query.py:52-61; the
@@ -69,12 +78,7 @@ object Search {
     val stats = docInfo.agg(
       count(lit(1)).cast("double").as("n_docs"),
       avg(col("length")).as("avg_len"))
-
-    // J1 + P6: inner join drops df==0 terms (terms absent from the index
-    // simply have no match). Broadcast the tiny terms relation.
-    // J2: postings fetch; J3: doc length attach; J4: stats broadcast.
-    broadcast(terms)
-      .join(termDf, "term")
+    queryTermDf
       .join(postings.select("term", "doc_id", "tf"), "term")
       .join(docInfo.select("doc_id", "length"), "doc_id")
       .crossJoin(broadcast(stats))
@@ -83,7 +87,13 @@ object Search {
         BM25.termScore(col("tf"), col("idf"), col("length"), col("avg_len")))
   }
 
-  /** Per-doc top-k + display-metadata attach shared by every search shape. */
+  /** Per-doc top-k + display-metadata attach shared by every search shape.
+    * The display sort ends in `limit(k)` so it plans as ONE
+    * TakeOrderedAndProject over the ≤k joined rows: a bare `orderBy` would
+    * range-partition them, a sampling job plus a shuffle-map job per query
+    * to sort at most k rows. The limit never cuts a row — the winners are
+    * ≤k and doc_id is unique in doc_info.
+    */
   private def topAndTitle(components: DataFrame, docInfo: DataFrame,
                           k: Int): DataFrame = {
     val top = components
@@ -98,6 +108,7 @@ object Search {
       // ordering and the top-k cut stay on the raw value
       .select(col("doc_id"), col("title"), graft.Money.micros(col("score")).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
+      .limit(k)
   }
 
   /** Typo-tolerant search: each query token expands to every vocabulary
@@ -144,20 +155,46 @@ object Search {
     * Indexer.buildBucketedIndex — the reference's actual architecture
     * (app/index.sh persists once; app/query.py:97-139 reads per query),
     * minus Cassandra. Literal IN-list `term` filters prune buckets
-    * (SelectedBucketsCount) and parquet row groups at the scan; the
-    * postings ⋈ term_df term join is co-located by the shared bucketing,
-    * so no exchange lands on either index scan. At 100 TB each query
-    * touches |terms| buckets of the postings table, not the corpus.
+    * (SelectedBucketsCount) and parquet row groups at the scan. At 100 TB
+    * each query touches |terms| buckets of the postings table, not the
+    * corpus.
+    *
+    * The plan runs six jobs per query (four when no query term is
+    * indexed), each kept on purpose:
+    *  - doc-length broadcast (J3): doc_info is keyed by doc_id, not term,
+    *    so the other ways to attach lengths are a shuffle of the candidates
+    *    or a length column in postings (an index-format change);
+    *  - collection stats (J4), two jobs — the global aggregate's exchange
+    *    and its singleton broadcast. A driver-side stats action would save
+    *    them but break the one-lazy-plan contract;
+    *  - the per-doc score-sum exchange (A6), the only shuffle, over the
+    *    candidate set;
+    *  - the k-row winners broadcast into the title attach, which keeps
+    *    titles out of the scoring shuffle;
+    *  - the final TakeOrderedAndProject ([[topAndTitle]]).
+    * The postings ⋈ term_df term join costs no job: the IN-list already
+    * restricts term_df to the query's terms (one row per term, so no
+    * separate terms relation is joined), and a per-plan `shuffle_hash`
+    * hint on the pruned term_df side makes it a ShuffledHashJoin over the
+    * two tables' shared `bucketBy(term)` layout — co-located, no exchange
+    * and no broadcast on either index scan.
     */
   def searchPrebuilt(spark: SparkSession, query: String, prefix: String,
-                     k: Int = 10): DataFrame = {
-    val toks = queryTokens(query)
+                     k: Int = 10): DataFrame =
+    searchTerms(spark, queryTokens(query), prefix, k)
+
+  /** The bucket-pruned search over an explicit (distinct) term list,
+    * shared by the exact and fuzzy prebuilt paths.
+    */
+  private def searchTerms(spark: SparkSession, terms: Seq[String],
+                          prefix: String, k: Int): DataFrame = {
     val postings = spark.table(s"${prefix}_postings")
-      .filter(col("term").isin(toks: _*))
+      .filter(col("term").isin(terms: _*))
     val termDf = spark.table(s"${prefix}_term_df")
-      .filter(col("term").isin(toks: _*))
+      .filter(col("term").isin(terms: _*))
+      .hint("shuffle_hash")
     val docInfo = spark.table(s"${prefix}_doc_info")
-    search(spark, query, postings, termDf, docInfo, k)
+    topAndTitle(scoreTerms(termDf, postings, docInfo), docInfo, k)
   }
 
   /** Hybrid retrieval served ENTIRELY from persisted stores: the lexical
@@ -369,32 +406,32 @@ object Search {
   /** Typo-tolerant search over the persisted bucketed index. Two phases:
     * the expansion scans the (vocabulary-sized) stored term_df table for
     * terms within `maxDist` edits of the query tokens and collects the
-    * tiny match set — a driver round-trip bounded by the expansion size,
-    * never the index. The expanded literals then drive the SAME
-    * bucket-pruned search as the exact path: without the materialized
-    * IN-list the term filter would be a join against a computed set, and
-    * SelectedBucketsCount pruning — the thing that makes a query touch
-    * |terms| buckets instead of the corpus at 100 TB — cannot happen.
-    * The lost laziness is the price of the pruning; production engines
-    * make the same trade (query rewrite before index access).
+    * tiny match set — ONE filter-and-collect job, bounded by the
+    * vocabulary, never the index; the match set is de-duplicated on the
+    * driver. The expanded literals then drive the SAME bucket-pruned
+    * search as the exact path ([[searchPrebuilt]], six jobs): without the
+    * materialized IN-list the term filter would be a join against a
+    * computed set, and SelectedBucketsCount pruning — the thing that makes
+    * a query touch |terms| buckets instead of the corpus at 100 TB —
+    * cannot happen. The lost laziness is the price of the pruning;
+    * production engines make the same trade (query rewrite before index
+    * access).
+    *
+    * The query tokens reach the filter as ONE array literal, tested by an
+    * `exists` lambda with the length-band guard before the levenshtein.
+    * No query-derived value is inlined into generated code (an array
+    * literal is passed by reference, and the lambda is interpreted), so a
+    * warmed JVM compiles no new class per fuzzy query.
     */
   def fuzzySearchPrebuilt(spark: SparkSession, query: String, prefix: String,
                           k: Int = 10, maxDist: Int = 1): DataFrame = {
-    val qt = queryTerms(spark, query).select(col("term").as("qterm"))
-    val expanded = spark.table(s"${prefix}_term_df").select("term")
-      .join(broadcast(qt),
-        abs(length(col("term")) - length(col("qterm"))) <= maxDist &&
-          levenshtein(col("term"), col("qterm")) <= maxDist)
-      .select("term").distinct()
-      .collect().map(_.getString(0)).toSeq
-    val postings = spark.table(s"${prefix}_postings")
-      .filter(col("term").isin(expanded: _*))
-    val termDf = spark.table(s"${prefix}_term_df")
-      .filter(col("term").isin(expanded: _*))
-    val docInfo = spark.table(s"${prefix}_doc_info")
-    import spark.implicits._
-    topAndTitle(componentsOver(expanded.toDF("term"), postings, termDf, docInfo),
-      docInfo, k)
+    val term = col("term")
+    val expanded = spark.table(s"${prefix}_term_df").select(term)
+      .filter(exists(typedLit(queryTokens(query)), q =>
+        abs(length(term) - length(q)) <= maxDist &&
+          levenshtein(term, q) <= maxDist))
+      .collect().map(_.getString(0)).distinct.toSeq
+    searchTerms(spark, expanded, prefix, k)
   }
 
   /** Batch search: score a whole TABLE of queries in one lazy plan — the

@@ -78,10 +78,18 @@ case class TopKByScore(
   override def update(buffer: TopKBuffer, input: InternalRow): TopKBuffer = {
     val s = score.eval(input)
     val i = id.eval(input)
-    // null score/id rows cannot be ranked; the window form would sort them
-    // last (nulls-last ordering) and they never beat a real row — skip.
-    if (s != null && i != null)
-      buffer.insert(s.asInstanceOf[Double], i.asInstanceOf[Long])
+    // Rows with a null score or id, or a NaN score, are skipped, and here
+    // the aggregate DIVERGES from the window form: the window sorts null
+    // scores last (so they still fill a group that has fewer than k real
+    // rows) and NaN scores first (Spark orders NaN above +Infinity), while
+    // the buffer's `>` comparator cannot rank NaN at all — one NaN in the
+    // tail slot would block every later insert. The divergence is
+    // unreachable on the BM25 path: its scores are sums over inner-joined,
+    // non-null, finite per-term components.
+    if (s != null && i != null) {
+      val sd = s.asInstanceOf[Double]
+      if (!sd.isNaN) buffer.insert(sd, i.asInstanceOf[Long])
+    }
     buffer
   }
 

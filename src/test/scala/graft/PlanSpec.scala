@@ -45,6 +45,79 @@ class PlanSpec extends SparkSpec {
       s"term join shuffled a bucketed index scan:\n$p")
   }
 
+  /** Spark jobs one action runs. A listener counts the jobs tagged with a
+    * fresh job group; a marker job run after the action, in another group,
+    * is posted after every event of the action, so once the listener has
+    * seen the marker's start it has seen every job the action ran.
+    */
+  private def jobsOf(action: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"graft-plan-jobs-${System.nanoTime()}"
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(): Unit
+          case Some(g) if g == s"$group-marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "plan-shape guard")
+      try action finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "plan-shape guard marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the marker job")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private lazy val searchIndex: String = {
+    val prefix = "graft_plan_search"
+    operators.Indexer.buildBucketedIndex(spark,
+      Tables.documents(spark, dir).select("doc_id", "text"), prefix)
+    prefix
+  }
+
+  test("one prebuilt search runs in 6 jobs (fuzzy: 7) with a co-located term join") {
+    import operators.Search
+    val index = searchIndex // built before any job is counted
+    val exact = () => Search.searchPrebuilt(spark,
+      "spark filter join stream data", index, 10)
+    val fuzzy = () => Search.fuzzySearchPrebuilt(spark,
+      "spork filtr joib stream datq", index, 10)
+    // the counts are a property of the plan, so they repeat exactly
+    val exactJobs = Seq.fill(2)(jobsOf(exact().collect(): Unit))
+    val fuzzyJobs = Seq.fill(2)(jobsOf(fuzzy().collect(): Unit))
+    assert(exactJobs.distinct.size == 1 && exactJobs.head <= 6,
+      s"exact prebuilt search ran $exactJobs jobs")
+    assert(fuzzyJobs.distinct.size == 1 && fuzzyJobs.head <= 7,
+      s"fuzzy prebuilt search ran $fuzzyJobs jobs")
+    for (p <- Seq(exact(), fuzzy()).map(_.queryExecution.executedPlan.toString)) {
+      // the display sort of <= k rows plans as TakeOrderedAndProject, not
+      // a range exchange (a sampling job plus a shuffle-map job)
+      assert(!p.contains("Exchange rangepartitioning"),
+        s"display sort range-partitions:\n$p")
+      // the query terms reach the index as IN-list literals only; no
+      // separate terms relation is broadcast into the term join
+      val lines = p.linesIterator.toSeq
+      assert(!lines.zip(lines.drop(1)).exists { case (a, b) =>
+        a.contains("BroadcastExchange") && b.contains("LocalTableScan") },
+        s"a literal terms relation is broadcast:\n$p")
+      assert(p.contains("SelectedBucketsCount"),
+        s"term IN-list did not prune buckets:\n$p")
+      assert(p.contains("In(term"), s"term filter not pushed to the scan:\n$p")
+      assert(p.contains("ShuffledHashJoin"),
+        s"term join is not the co-located hash join:\n$p")
+      assert(!p.contains("Exchange hashpartitioning(term"),
+        s"term join shuffled a bucketed index scan:\n$p")
+    }
+  }
+
   test("appended bucketed index keeps bucket pruning and shuffle-free term joins") {
     val p = plan("index_append_persisted")
     assert(p.contains("Bucketed: true"), s"appended index scans not bucketed:\n$p")

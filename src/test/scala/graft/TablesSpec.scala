@@ -38,6 +38,41 @@ class TablesSpec extends SparkSpec {
     assert(load(asLtz) == expected, "timestamp path")
   }
 
+  test("schema memo re-infers one path under each nanosAsLong setting") {
+    // Spark cannot write TIMESTAMP(NANOS); parquet's example writer can
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val path = s"${ScratchDirs.fresh("graft_test", "nanos_memo")}/t.parquet"
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$path/part-0.parquet"))
+      .withType(schema).build()
+    w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1700000000123456789L))
+    w.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "true")
+      val asLong = Tables.pq(spark, path)
+      assert(asLong.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+      assert(asLong.select("ts").as[Long].collect().toSeq == Seq(1700000000123456789L))
+      // without the setting, a fresh inference rejects the nanos column;
+      // the memoized read must do the same, not reuse the LONG schema
+      spark.conf.set(key, "false")
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        Tables.pq(spark, path).collect())
+      assert(e.getMessage.contains("TIMESTAMP(NANOS"), e.getMessage)
+      spark.conf.set(key, "true")
+      assert(Tables.pq(spark, path).schema == asLong.schema)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("loader rejects an unsupported ts type loudly") {
     val asString = writeEvents("str", lit("2024-01-01").cast("string"))
     val e = intercept[RuntimeException](Tables.events(spark, asString))

@@ -75,6 +75,20 @@ class TopKAggSpec extends SparkSpec {
     assert(out == Set((1L, 11L, 1), (1L, 10L, 2), (2L, 20L, 1)))
   }
 
+  test("NaN and null scores are skipped and never block later rows") {
+    import spark.implicits._
+    val df = Seq[(Long, Long, Option[Double])](
+        (1L, 10L, Some(Double.NaN)), (1L, 11L, Some(0.9)), (1L, 12L, None),
+        (1L, 13L, Some(0.4)), (1L, 14L, Some(Double.NaN)), (1L, 15L, Some(0.7)))
+      .toDF("query_id", "doc_id", "score")
+    val out = df.groupBy(col("query_id"))
+      .agg(TopKAgg.topK(col("score"), col("doc_id"), 2).as("top"))
+      .select(posexplode(col("top")).as(Seq("pos", "e")))
+      .select(col("e.doc_id"), col("e.score"))
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(out == Seq((11L, 0.9), (15L, 0.7)))
+  }
+
   test("serialize/deserialize round-trips partial buffers") {
     import org.apache.spark.sql.graft.ColumnBridge
     val agg = graft.plans.TopKByScore(
